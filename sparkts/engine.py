@@ -25,7 +25,6 @@ Scale design notes
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
 import numpy as np
@@ -46,8 +45,9 @@ from sparkts.plans.schema import (
 _BKT = "__sparkts_bkt"
 
 
-def _kernel_parallelism(df: DataFrame) -> tuple[int, int]:
-    """(n_partitions, n_buckets) for grouped-map kernels.
+def _bucketed(df: DataFrame, id_col: str) -> DataFrame:
+    """``df`` with hash bucket ``_BKT`` of ``id_col``, repartitioned on it
+    — the batching shape every grouped-map kernel runs over.
 
     Scale-adaptive: partitions = 2× the cluster's parallelism — the
     standard 2-tasks-per-core sizing, so the scheduler can back-fill
@@ -59,12 +59,11 @@ def _kernel_parallelism(df: DataFrame) -> tuple[int, int]:
     overhead, so ×2 is the default. Buckets stay at 8× parallelism
     (unchanged absolute count: the number of Python grouped-map calls is
     the number of non-empty buckets, so more partitions don't add
-    boundary crossings). ``SPARKTS_KERNEL_BUCKETS`` overrides the bucket
-    count for deployments whose series-count/core ratio is extreme."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism * 2
-    b = int(os.environ.get("SPARKTS_KERNEL_BUCKETS", "0")) or n * 4
-    return n, b
+    boundary crossings). Sizes come from the session alone, so both sides
+    of a cogroup get the same buckets and partitions."""
+    n = df.sparkSession.sparkContext.defaultParallelism * 2
+    return (df.withColumn(_BKT, F.pmod(F.xxhash64(id_col), F.lit(n * 4)))
+            .repartition(n, _BKT))
 
 
 def _apply_by_series(df: DataFrame, id_col: str, kernel, schema) -> DataFrame:
@@ -85,7 +84,6 @@ def _apply_by_series(df: DataFrame, id_col: str, kernel, schema) -> DataFrame:
     serializing every kernel call on one worker. AQE leaves user
     repartitioning alone, and the groupBy reuses it (no second exchange —
     asserted in tests/test_plans.py)."""
-    n, b = _kernel_parallelism(df)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.drop(columns=[_BKT])
@@ -94,12 +92,7 @@ def _apply_by_series(df: DataFrame, id_col: str, kernel, schema) -> DataFrame:
             return outs[0]
         return pd.concat(outs, ignore_index=True)
 
-    return (
-        df.withColumn(_BKT, F.pmod(F.xxhash64(id_col), F.lit(b)))
-        .repartition(n, _BKT)
-        .groupBy(_BKT)
-        .applyInPandas(run, schema)
-    )
+    return _bucketed(df, id_col).groupBy(_BKT).applyInPandas(run, schema)
 
 
 def _apply_by_series_cogrouped(left: DataFrame, right: DataFrame,
@@ -110,11 +103,6 @@ def _apply_by_series_cogrouped(left: DataFrame, right: DataFrame,
     applied per series inside. Series present on either side are visited,
     with an empty frame for the missing side — the cogroup-on-id
     contract the per-series kernels rely on for their validation errors."""
-    n, b = _kernel_parallelism(left)
-
-    def bucketed(df):
-        return (df.withColumn(_BKT, F.pmod(F.xxhash64(id_col), F.lit(b)))
-                .repartition(n, _BKT))
 
     def run(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         lpdf = lpdf.drop(columns=[_BKT])
@@ -130,8 +118,8 @@ def _apply_by_series_cogrouped(left: DataFrame, right: DataFrame,
         return pd.concat(outs, ignore_index=True)
 
     return (
-        bucketed(left).groupBy(_BKT)
-        .cogroup(bucketed(right).groupBy(_BKT))
+        _bucketed(left, id_col).groupBy(_BKT)
+        .cogroup(_bucketed(right, id_col).groupBy(_BKT))
         .applyInPandas(run, schema)
     )
 

@@ -140,15 +140,17 @@ def _find_ddot():
                 h = ctypes.CDLL(so)
             except OSError:
                 continue
-            for sym in ("cblas_ddot64_", "cblas_ddot"):
+            # ILP64 builds export cblas_ddot64_ (64-bit ints), plain LP64
+            # builds cblas_ddot (C int)
+            for sym, int_t in (("cblas_ddot64_", ctypes.c_longlong),
+                               ("cblas_ddot", ctypes.c_int)):
                 fn = getattr(h, sym, None)
                 if fn is not None:
                     addr = ctypes.cast(fn, ctypes.c_void_p).value
                     # confirm bit-equality with np.dot before trusting it
                     fn.restype = ctypes.c_double
-                    fn.argtypes = [ctypes.c_longlong, ctypes.c_void_p,
-                                   ctypes.c_longlong, ctypes.c_void_p,
-                                   ctypes.c_longlong]
+                    fn.argtypes = [int_t, ctypes.c_void_p, int_t,
+                                   ctypes.c_void_p, int_t]
                     rng = _np.random.default_rng(0)
                     for n in (1, 3, 7, 16, 63, 64, 200, 513):
                         e = rng.normal(0, 1, n)

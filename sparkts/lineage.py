@@ -14,24 +14,27 @@ Design
 * Rollup hash = ``bit_xor`` of per-row ``xxhash64`` over the canonicalized
   row — order-insensitive, computed JVM-side, so two runs (any partitioning,
   any executor count) of the same day must produce the same hash.
-* Resume protocol: pending days = distinct days in the input, anti-joined
-  against completed lineage days. Day directories on disk that have NO
-  lineage row are torn out first (a crash window leaves data without
-  lineage, never lineage without data — lineage is committed last).
+* Resume protocol: ``TierPipeline.run`` reads ``_lineage`` once, into a
+  stage → completed-days map; each tier's pending days are the input days
+  not in its stage's set (a filter on ``day``, no join). Day directories
+  on disk that have NO lineage row are torn out first (a crash window
+  leaves data without lineage, never lineage without data — lineage is
+  committed last).
 
 Iceberg note: the north star names Iceberg tables; this container has no
 Iceberg runtime jar (offline, no spark.jars.packages), so the storage layer
 is day-partitioned parquet + the ``_lineage`` manifest — the same
 snapshot/manifest discipline expressed manually. On a cluster with
 ``iceberg-spark-runtime`` on the classpath the writes become
-``writeTo(...).using("iceberg")`` and the resume anti-join reads the
-table's own snapshot metadata; nothing else changes.
+``writeTo(...).using("iceberg")`` and the completed-days map comes from
+the table's own snapshot metadata; nothing else changes.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -61,14 +64,14 @@ class LineageStore:
             return None
         return self.spark.read.parquet(self.path)
 
-    def completed_parts(self, stage: str) -> set[str]:
+    def completed(self) -> dict[str, set[str]]:
+        """stage → the part ids recorded for it, from one read."""
         df = self.read()
-        if df is None:
-            return set()
-        return {
-            r.part_id
-            for r in df.where(F.col("stage") == stage).select("part_id").collect()
-        }
+        done: dict[str, set[str]] = {}
+        if df is not None:
+            for r in df.select("stage", "part_id").collect():
+                done.setdefault(r.stage, set()).add(r.part_id)
+        return done
 
     def append(self, rows: list[dict]) -> None:
         if not rows:
@@ -115,22 +118,16 @@ class TierPipeline:
 
     # ------------------------------------------------------------------ #
     def _write_pending_days(
-        self, stage: str, tier_df: DataFrame, out_path: str, run_id: str
+        self, stage: str, tier_df: DataFrame, out_path: str, run_id: str,
+        done: set[str],
     ) -> int:
-        """Write only days not yet recorded in lineage; lineage rows last."""
-        completed = self.lineage.completed_parts(stage)
-        _reconcile(out_path, completed)
-        with_day = tier_df.withColumn("day", F.to_date("bucket"))
-        pending = with_day
-        if completed:
-            done_df = self.spark.createDataFrame(
-                [(d,) for d in completed], ["day_done"]
-            ).withColumn("day_done", F.col("day_done").cast("date"))
-            pending = with_day.join(
-                F.broadcast(done_df),
-                with_day.day == done_df.day_done,
-                "left_anti",
-            )
+        """Write only days not in ``done`` (the stage's lineage days);
+        lineage rows last."""
+        _reconcile(out_path, done)
+        pending = tier_df.withColumn("day", F.to_date("bucket"))
+        if done:
+            pending = pending.where(~F.col("day").isin(
+                [date.fromisoformat(d) for d in done]))
         pending = pending.cache()
         try:
             day_stats = (
@@ -187,12 +184,16 @@ class TierPipeline:
         pipeline used to drop them, silently disabling the
         extraction-mismatch check the north rule requires."""
         tiers = sorted(tiers or list(TIERS), key=lambda t: TIERS[t])
+        # one lineage read per run: this run only appends rows of the
+        # stage it just wrote, so each later stage's set cannot change
+        done = self.lineage.completed()
         results: dict[str, int] = {}
         base = tiers[0]
         base_df = rollup_base(activity, ts_col, self.key_cols, value_col,
                               base, extra_aggs=extra_aggs)
         results[base] = self._write_pending_days(
-            f"tier_{base}", base_df, self.tier_path(base), run_id
+            f"tier_{base}", base_df, self.tier_path(base), run_id,
+            done.get(f"tier_{base}", set()),
         )
         extra_cols = list(extra_aggs or {})
         for prev, cur in zip(tiers, tiers[1:]):
@@ -200,6 +201,7 @@ class TierPipeline:
             casc = rollup_cascade(finer, self.key_cols, cur,
                                   extra_sum_cols=extra_cols)
             results[cur] = self._write_pending_days(
-                f"tier_{cur}", casc, self.tier_path(cur), run_id
+                f"tier_{cur}", casc, self.tier_path(cur), run_id,
+                done.get(f"tier_{cur}", set()),
             )
         return results

@@ -53,6 +53,32 @@ def bucket_ts(ts_col: str, width_s: int) -> F.Column:
     return F.timestamp_seconds((epoch - (epoch % width_s)))
 
 
+def raw_stats(value_col: str) -> list[F.Column]:
+    """The tier statistics of a raw column, one aggregate per ``STAT_COLS``
+    name. Every tier-producing group-by starts from these."""
+    v = F.col(value_col).cast("double")
+    return [
+        F.count(v).alias("n_rows"),
+        F.sum(v).alias("v_sum"),
+        F.min(v).alias("v_min"),
+        F.max(v).alias("v_max"),
+        F.sum(v * v).alias("v_sumsq"),
+    ]
+
+
+def merge_stats(extra_sum_cols: list[str] | None = None) -> list[F.Column]:
+    """Re-aggregate finer ``STAT_COLS`` rows (plus the sum-decomposable
+    ``extra_sum_cols``) into coarser ones — exact, because every statistic
+    is sum/min/max-decomposable."""
+    return [
+        F.sum("n_rows").alias("n_rows"),
+        F.sum("v_sum").alias("v_sum"),
+        F.min("v_min").alias("v_min"),
+        F.max("v_max").alias("v_max"),
+        F.sum("v_sumsq").alias("v_sumsq"),
+    ] + [F.sum(name).alias(name) for name in extra_sum_cols or []]
+
+
 def rollup_base(
     df: DataFrame,
     ts_col: str,
@@ -67,18 +93,11 @@ def rollup_base(
     mismatch count) through the same single scan — at 100 TB the raw scan is
     the dominant cost, so every per-row check must share it rather than
     re-scan."""
-    width = TIERS[tier]
-    v = F.col(value_col).cast("double")
-    aggs = [
-        F.count(v).alias("n_rows"),
-        F.sum(v).alias("v_sum"),
-        F.min(v).alias("v_min"),
-        F.max(v).alias("v_max"),
-        F.sum(v * v).alias("v_sumsq"),
-    ]
+    aggs = raw_stats(value_col)
     for name, col in (extra_aggs or {}).items():
         aggs.append(col.alias(name))
-    return df.groupBy(*key_cols, bucket_ts(ts_col, width).alias("bucket")).agg(*aggs)
+    bucket = bucket_ts(ts_col, TIERS[tier]).alias("bucket")
+    return df.groupBy(*key_cols, bucket).agg(*aggs)
 
 
 def rollup_cascade(
@@ -91,20 +110,8 @@ def rollup_cascade(
     stats — the continuous-aggregate invariant (coarse == direct-from-raw is
     tested; see tests/test_rollup.py). ``extra_sum_cols`` are summed through
     (they must be sum-decomposable, like the extra_aggs of rollup_base)."""
-    width = TIERS[to_tier]
-    aggs = [
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("v_sum").alias("v_sum"),
-        F.min("v_min").alias("v_min"),
-        F.max("v_max").alias("v_max"),
-        F.sum("v_sumsq").alias("v_sumsq"),
-    ]
-    for name in extra_sum_cols or []:
-        aggs.append(F.sum(name).alias(name))
-    return (
-        finer.groupBy(*key_cols, bucket_ts("bucket", width).alias("bucket"))
-        .agg(*aggs)
-    )
+    bucket = bucket_ts("bucket", TIERS[to_tier]).alias("bucket")
+    return finer.groupBy(*key_cols, bucket).agg(*merge_stats(extra_sum_cols))
 
 
 def build_tiers(

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from sparkts.operators.rollup import TIERS, bucket_ts
+from sparkts.operators.rollup import merge_stats, rollup_base
 
 
 def salted_rollup_base(
@@ -34,30 +34,10 @@ def salted_rollup_base(
     """Two-stage salted version of ``rollup_base`` — same output, skew-proof
     shuffle. ``salt_source`` is a column whose hash spreads the hot cell
     (defaults to the raw timestamp so rows of one hot bucket still spread)."""
-    width = TIERS[tier]
-    v = F.col(value_col).cast("double")
     src = F.col(salt_source) if salt_source else F.col(ts_col).cast("string")
-    salt = F.pmod(F.xxhash64(src), F.lit(n_salts)).alias("__salt")
-    partial = (
-        df.groupBy(*key_cols, bucket_ts(ts_col, width).alias("bucket"), salt)
-        .agg(
-            F.count(v).alias("n_rows"),
-            F.sum(v).alias("v_sum"),
-            F.min(v).alias("v_min"),
-            F.max(v).alias("v_max"),
-            F.sum(v * v).alias("v_sumsq"),
-        )
-    )
-    return (
-        partial.groupBy(*key_cols, "bucket")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("v_sum").alias("v_sum"),
-            F.min("v_min").alias("v_min"),
-            F.max("v_max").alias("v_max"),
-            F.sum("v_sumsq").alias("v_sumsq"),
-        )
-    )
+    salted = df.withColumn("__salt", F.pmod(F.xxhash64(src), F.lit(n_salts)))
+    partial = rollup_base(salted, ts_col, key_cols + ["__salt"], value_col, tier)
+    return partial.groupBy(*key_cols, "bucket").agg(*merge_stats())
 
 
 def key_skew_profile(df: DataFrame, key_cols: list[str], top_n: int = 20) -> DataFrame:

@@ -17,6 +17,12 @@ from pyspark.sql import SparkSession
 _BLAS_VARS = ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS")
 
 
+def _default_heap() -> str:
+    """min(16g, ¼ of physical memory), in whole megabytes."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16 * 1024, phys // 4 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "sparkts",
     master: str | None = None,
@@ -63,8 +69,10 @@ def get_spark(
             # in the kernel and high-parallelism runs spend >25% CPU in sys
             # time — extraction at local[32] measured 3.6x SLOWER than
             # local[8] before this, 2.4x faster after. On a real cluster the
-            # same conf goes to spark.executor.extraJavaOptions.
-            mem = os.environ.get("SPARKTS_DRIVER_MEM", "16g")
+            # same conf goes to spark.executor.extraJavaOptions. The
+            # default heap is capped at a quarter of physical memory: a
+            # pre-touched heap larger than the host cannot start the JVM.
+            mem = os.environ.get("SPARKTS_DRIVER_MEM") or _default_heap()
             builder = (
                 builder.config("spark.driver.memory", mem)
                 .config(

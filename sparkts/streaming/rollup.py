@@ -13,13 +13,20 @@ Late data: the watermark bounds state; rows later than the watermark are
 dropped by Spark (documented behavior). The batch backfill path
 (rollup_base over the raw table) remains the source of truth for replays —
 the lineage table records which bucket ranges came from which path.
+
+Commit ledger: a batch's rows land in ``data/batch=<id>`` and only then
+its one-row marker ``commits/batch=<id>``. The set of committed ids is
+found in one place, ``_committed``: a single Hadoop glob over the marker
+directories, no Spark job. Every reader, the compactor and the batch
+publisher take that set; data directories without a finished marker are
+invisible.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
-from sparkts.operators.rollup import TIERS
+from sparkts.operators.rollup import STAT_COLS, TIERS, raw_stats, rollup_cascade
 
 
 def stream_rollup(
@@ -34,22 +41,36 @@ def stream_rollup(
     with a late-data watermark; emits the same schema as rollup_base
     (keys, bucket, n_rows/v_sum/v_min/v_max/v_sumsq)."""
     width = TIERS[tier]
-    v = F.col(value_col).cast("double")
     ts = F.col(ts_col).cast("timestamp")
     return (
         stream_df.withColumn("__ts", ts)
         .withWatermark("__ts", watermark)
         .groupBy(*key_cols, F.window("__ts", f"{width} seconds").alias("w"))
-        .agg(
-            F.count(v).alias("n_rows"),
-            F.sum(v).alias("v_sum"),
-            F.min(v).alias("v_min"),
-            F.max(v).alias("v_max"),
-            F.sum(v * v).alias("v_sumsq"),
-        )
-        .select(*key_cols, F.col("w.start").alias("bucket"),
-                "n_rows", "v_sum", "v_min", "v_max", "v_sumsq")
+        .agg(*raw_stats(value_col))
+        .select(*key_cols, F.col("w.start").alias("bucket"), *STAT_COLS)
     )
+
+
+def _committed(spark, out_path: str) -> list[int]:
+    """Committed batch ids under ``out_path``, ascending, from ONE Hadoop
+    glob over the ``commits/batch=<id>`` markers — no Spark job. A marker
+    counts once its write has finished, i.e. once it holds a visible file
+    (name not starting with ``_`` or ``.``, the rule a parquet read of
+    ``commits/`` applies), so a marker directory still holding only
+    ``_temporary/`` is uncommitted. A missing ``commits/`` globs to
+    nothing (``[]``); any other listing failure raises."""
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(
+        f"{out_path}/commits/batch=*/[!_.]*")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    return sorted({int(st.getPath().getParent().getName().split("=", 1)[1])
+                   for st in fs.globStatus(pattern)})
+
+
+def _latest_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Merge-on-read: per (keys, bucket), the row of the highest ``batch``."""
+    w = Window.partitionBy(*key_cols, "bucket").orderBy(F.col("batch").desc())
+    return (df.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1).drop("__rn", "batch"))
 
 
 def commit_batch(batch_df: DataFrame, batch_id: int, out_path: str) -> None:
@@ -145,19 +166,11 @@ def commit_tier_batch(df: DataFrame, out_path: str) -> int:
     micro-batch and be silently overwritten). Under latest-wins
     merge-on-read a batch publish therefore supersedes stream batches —
     snapshot-replaces-table semantics. Returns the committed id."""
-    from pyspark.errors import AnalysisException
-
-    spark = df.sparkSession
-    try:
-        committed = [
-            int(r[0]) for r in spark.read.parquet(f"{out_path}/commits")
-            .select("batch_id").collect()]
-    except AnalysisException:
-        # missing commits dir = first publish; any OTHER read failure must
-        # propagate — treating a transient listing error as "nothing
-        # committed" would re-allocate id BATCH_ID_BASE and overwrite the
-        # oldest committed generation
-        committed = []
+    # a missing commits dir is the first publish; any OTHER listing
+    # failure must propagate — treating a transient listing error as
+    # "nothing committed" would re-allocate id BATCH_ID_BASE and overwrite
+    # the oldest committed generation
+    committed = _committed(df.sparkSession, out_path)
     new_id = max((c for c in committed if c >= BATCH_ID_BASE),
                  default=BATCH_ID_BASE - 1) + 1
     commit_batch(df, new_id, out_path)
@@ -170,36 +183,23 @@ def read_tier_snapshot(spark, out_path: str) -> DataFrame:
     semantics), unlike ``read_tier_stream_output``'s per-bucket
     latest-wins merge (streaming upsert semantics). Torn writes (data
     without marker) stay invisible either way."""
-    committed = [
-        int(r[0]) for r in spark.read.parquet(f"{out_path}/commits")
-        .select("batch_id").collect()]
+    committed = _committed(spark, out_path)
     if not committed:
         raise ValueError(f"nothing committed under {out_path}")
     return (spark.read.parquet(f"{out_path}/data")
-            .where(F.col("batch") == max(committed)).drop("batch"))
+            .where(F.col("batch") == committed[-1]).drop("batch"))
 
 
 def read_tier_stream_output(spark, out_path: str, key_cols: list[str]) -> DataFrame:
     """Merge-on-read over the committed sink output: committed batches
     only (uncommitted orphans from a mid-write crash are invisible),
     latest batch id wins per (keys, bucket). The committed-id set is
-    commit-log metadata — O(#batches), collected driver-side like any
-    table manifest — and the ``batch`` partition filter prunes orphan
-    directories at the scan."""
-    from pyspark.sql import Window as W
-
-    committed = [
-        int(r[0])
-        for r in spark.read.parquet(f"{out_path}/commits").select("batch_id").collect()
-    ]
+    commit-log metadata — one listing of the markers (``_committed``),
+    like reading a table manifest — and the ``batch`` partition filter
+    prunes orphan directories at the scan."""
     df = spark.read.parquet(f"{out_path}/data").where(
-        F.col("batch").isin(committed))
-    w = W.partitionBy(*key_cols, "bucket").orderBy(F.col("batch").desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "batch")
-    )
+        F.col("batch").isin(_committed(spark, out_path)))
+    return _latest_wins(df, key_cols)
 
 
 def compact_tier_output(spark, out_path: str, key_cols: list[str]) -> int:
@@ -244,11 +244,7 @@ def compact_tier_output(spark, out_path: str, key_cols: list[str]) -> int:
 
     Returns the consolidated stream batch id (or, when only batch
     generations exist, the surviving snapshot id)."""
-    committed = [
-        int(r[0])
-        for r in spark.read.parquet(f"{out_path}/commits")
-        .select("batch_id").collect()
-    ]
+    committed = _committed(spark, out_path)
     if not committed:
         raise ValueError(f"nothing committed under {out_path}")
     jvm = spark._jvm
@@ -277,13 +273,8 @@ def compact_tier_output(spark, out_path: str, key_cols: list[str]) -> int:
             f"consolidated id {new_id} would enter the batch namespace")
     # merged view of the STREAM generations only (a committed batch
     # snapshot keeps shadowing per-bucket under latest-wins regardless)
-    from pyspark.sql import Window as W
-
-    df = spark.read.parquet(f"{out_path}/data").where(
-        F.col("batch").isin(stream_gens))
-    w = W.partitionBy(*key_cols, "bucket").orderBy(F.col("batch").desc())
-    merged = (df.withColumn("__rn", F.row_number().over(w))
-              .where(F.col("__rn") == 1).drop("__rn", "batch"))
+    merged = _latest_wins(spark.read.parquet(f"{out_path}/data").where(
+        F.col("batch").isin(stream_gens)), key_cols)
     commit_batch(merged, new_id, out_path)
     # GC superseded stream generations only after the marker landed
     gc(stream_gens)
@@ -303,8 +294,6 @@ def stream_cascade(spark, out_path: str, key_cols: list[str],
     result is identical to a batch cascade over the same raw rows — the
     streaming-equals-batch invariance extends to every tier, and a restart
     of the 1m stream (checkpointed) transparently refreshes all of them."""
-    from sparkts.operators.rollup import rollup_cascade
-
     base = read_tier_stream_output(spark, out_path, key_cols)
     out = {"1m": base}
     prev = base

@@ -5,7 +5,10 @@ value equality between the Spark result and DuckDB running the oracle SQL on
 the same parquet tables.
 """
 
+import ctypes
 import math
+import os
+import threading
 
 import duckdb
 import pytest
@@ -30,6 +33,44 @@ def duck(sf_dir):
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     return con
+
+
+def _oracle_df(con, sql):
+    """Run an oracle query, interrupting it once it has grown this
+    process's resident memory by a quarter of physical memory. DuckDB's
+    memory_limit does not bound every allocation (at sf0.001 the
+    intermittent_fc replay peaks above 13 GB), and an unbounded oracle gets
+    the whole test process killed by the OOM killer; interrupted, it fails
+    only its own test."""
+    page = os.sysconf("SC_PAGE_SIZE")
+
+    def rss():
+        with open("/proc/self/statm") as fh:
+            return int(fh.read().split()[1]) * page
+
+    limit = rss() + os.sysconf("SC_PHYS_PAGES") * page // 4
+    done = threading.Event()
+
+    def watch():
+        while not done.wait(0.05):
+            if rss() > limit:
+                con.interrupt()
+                return
+
+    watcher = threading.Thread(target=watch, daemon=True)
+    watcher.start()
+    try:
+        return con.execute(sql).df()
+    except duckdb.InterruptException:
+        pytest.fail(f"oracle grew resident memory past {limit >> 20} MB")
+    finally:
+        done.set()
+        watcher.join(timeout=5)
+        # glibc keeps freed query memory in its arenas; hand it back so the
+        # next oracle starts from the same resident size
+        trim = getattr(ctypes.CDLL(None), "malloc_trim", None)
+        if trim is not None:
+            trim(0)
 
 
 def _norm(df):
@@ -57,7 +98,7 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     assert len(got) > 0, f"{name}: empty result"
     if sql is None:
         return  # rows-only check
-    exp = duck.execute(sql).df()
+    exp = _oracle_df(duck, sql)
     assert sorted(got.columns) == sorted(exp.columns), (
         f"{name}: columns {sorted(got.columns)} vs {sorted(exp.columns)}"
     )

@@ -301,6 +301,16 @@ def test_nelder_mead_scan_matches_argsort_semantics():
         assert np.array_equal(xa, xb), trial
         assert fa == fb or (np.isinf(fa) and np.isinf(fb)), trial
 
+    # NaN at the first simplex vertex (x0 nudged along coordinate 0) and
+    # finite elsewhere: the scan must not keep the NaN vertex as best
+    def nan_first(x):
+        return np.nan if x[0] > 1.0 else float(((x - 0.3) ** 2).sum())
+
+    lo, hi = np.full(2, -2.0), np.full(2, 2.0)
+    xa, fa = nelder_mead(nan_first, np.ones(2), lo, hi, max_iter=200)
+    xb, fb = nm_reference(nan_first, np.ones(2), lo, hi, max_iter=200)
+    assert np.array_equal(xa, xb) and fa == fb and np.isfinite(fa)
+
 
 def test_ets_sse_bit_exact():
     """C SSE step of the ETS likelihood equals the numpy _lik arithmetic
@@ -326,3 +336,24 @@ def test_ets_sse_bit_exact():
         else:
             em = (y - fb) / fb
             assert got == float(np.dot(em, em))
+
+
+@pytest.mark.parametrize("n", [64, 65, 128])
+@pytest.mark.parametrize("alpha", [1.0, 0.3])
+def test_ses_levels_and_sse_bit_exact(n, alpha):
+    """C SES level scan and prepared SSE objective equal the numpy block
+    formula bit for bit: α = 1 (c = 0, the where() guard) and lengths on
+    both sides of the 64-row block edge."""
+    from sparkts.kernels import scan
+
+    y = np.random.default_rng(n).normal(50, 10, n)
+    levels_c = scan._ses_levels(y, alpha)
+    sse_c = scan._sse_fn(y)(alpha)
+    saved, nat.LIB = nat.LIB, None
+    try:
+        levels_py = scan._ses_levels(y, alpha)
+        sse_py = scan.ses_sse(y, alpha)
+    finally:
+        nat.LIB = saved
+    assert np.array_equal(levels_c, levels_py)
+    assert sse_c == sse_py

@@ -212,8 +212,13 @@ def test_compaction_keeps_stream_floor_below_batch_namespace(
 def test_uncommitted_orphan_batch_is_invisible(spark, events_dir,
                                                tmp_path_factory):
     """A crash BETWEEN the data write and the marker write leaves an
-    orphan data/batch=N directory; readers must not see it."""
-    from sparkts.streaming.rollup import commit_batch
+    orphan data/batch=N directory; readers must not see it. A crash
+    DURING the marker write leaves a marker directory holding only
+    ``_temporary/``: readers, the compactor and the batch publisher must
+    treat that batch as uncommitted too."""
+    from sparkts.streaming.rollup import (BATCH_ID_BASE, commit_batch,
+                                          commit_tier_batch,
+                                          compact_tier_output)
 
     out = str(tmp_path_factory.mktemp("tier_orphan"))
     raw = spark.read.parquet(events_dir)
@@ -226,6 +231,25 @@ def test_uncommitted_orphan_batch_is_invisible(spark, events_dir,
     want = tier.toPandas()
     assert len(got) == len(want)
     assert not (got["n_rows"] == 999).any()
+
+    # torn marker write: data lands, the marker holds only _temporary/
+    tier.limit(5).withColumn("n_rows", F_lit_999()).write.mode(
+        "overwrite").parquet(f"{out}/data/batch=2")
+    os.makedirs(f"{out}/commits/batch=2/_temporary/0")
+    got = read_tier_stream_output(spark, out, ["event_type"]).toPandas()
+    assert len(got) == len(want)
+    assert not (got["n_rows"] == 999).any()
+    # only batch 0 is committed, so the consolidated id is 1
+    assert compact_tier_output(spark, out, ["event_type"]) == 1
+    got = read_tier_stream_output(spark, out, ["event_type"]).toPandas()
+    assert len(got) == len(want)
+    assert not (got["n_rows"] == 999).any()
+
+    # a fresh directory whose only marker is torn has nothing committed:
+    # the first batch publish takes BATCH_ID_BASE
+    fresh = str(tmp_path_factory.mktemp("tier_fresh")) + "/tier"
+    os.makedirs(f"{fresh}/commits/batch={BATCH_ID_BASE}/_temporary/0")
+    assert commit_tier_batch(tier.limit(3), fresh) == BATCH_ID_BASE
 
 
 def F_lit_999():
