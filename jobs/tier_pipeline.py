@@ -40,7 +40,9 @@ def main() -> None:
     args = ap.parse_args()
 
     # imports AFTER arg parsing so --help works without the zip
-    from pyspark.sql import functions as F
+    from functools import reduce
+
+    from pyspark.sql import DataFrame, functions as F
 
     from sparkts.datagen import extract_text
     from sparkts.engine import SparkForecast
@@ -51,6 +53,7 @@ def main() -> None:
         crawl_activity_checked,
         gap_fill,
     )
+    from sparkts.operators.rollup import TIERS
     from sparkts.session import get_spark
 
     # master=None → spark-submit owns it (local fallback for direct runs)
@@ -68,13 +71,22 @@ def main() -> None:
 
     tiers = {t: pipe.read_tier(t) for t in new_days}
     kept = apply_retention(tiers, as_of=args.as_of) if args.as_of else tiers
-    tier_counts = {t: df.count() for t, df in kept.items()}
-    # finest tier by WIDTH (string min would pick '1d'); n_bad must be 0 —
-    # the north rule's byte-identical-extraction invariant
-    from sparkts.operators.rollup import TIERS as _TIERS
-    finest = min(tiers, key=lambda t: _TIERS[t])
-    n_bad = (tiers[finest].agg(F.sum("n_bad")).collect()[0][0]
-             if "n_bad" in tiers[finest].columns else None)
+    # one aggregate pass: points per retained tier, plus (tier = null)
+    # Σ n_bad over the whole finest tier by WIDTH (string min would pick
+    # '1d'); n_bad must be 0 — the north rule's byte-identical-extraction
+    # invariant
+    finest = min(tiers, key=lambda t: TIERS[t])
+    parts = [df.select(F.lit(t).alias("tier"),
+                       F.lit(None).cast("long").alias("n_bad"))
+             for t, df in kept.items()]
+    if "n_bad" in tiers[finest].columns:
+        parts.append(tiers[finest].select(
+            F.lit(None).cast("string").alias("tier"), "n_bad"))
+    agg = {r.tier: r for r in reduce(DataFrame.unionByName, parts)
+           .groupBy("tier").agg(F.count("*").alias("points"),
+                                F.sum("n_bad").alias("n_bad")).collect()}
+    tier_counts = {t: agg[t].points if t in agg else 0 for t in kept}
+    n_bad = agg[None].n_bad if None in agg else None
 
     filled = gap_fill(tiers["1h"], ["domain"], "bucket", value_cols=[],
                       step_s=3600, zero_cols=["v_sum"])

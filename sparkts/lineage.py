@@ -6,11 +6,22 @@ retention sweep or backfill killed mid-run resumes idempotently.
 
 Design
 ------
-* Each tier is written as parquet partitioned by ``day`` (UTC date of the
-  bucket) — the unit of checkpointing. At 100 TB that makes retention a
-  partition-prunable delete and backfill a per-day anti-join.
-* ``_lineage`` is itself a parquet table of rows
-  (stage, part_id, watermark, n_in, n_out, rollup_hash, run_id).
+* Tiers live under one root as ``tier=<t>/day=<d>/`` parquet (``day`` =
+  UTC date of the bucket) — the day is the unit of checkpointing. At
+  100 TB that makes retention a partition-prunable delete and backfill a
+  per-day filter.
+* One ``TierPipeline.run`` is one plan: the base tier from the raw scan,
+  each coarser tier cascaded in memory from the finer tier's pending rows,
+  all tiers unioned under a ``tier`` column and rebalanced on
+  (tier, day). One stats collect and ONE partitioned write cover every
+  tier ("one repartition, many outputs").
+* ``_lineage`` is a parquet table of rows
+  (stage, part_id, watermark, n_in, n_out, rollup_hash, run_id), written
+  and read by the driver with pyarrow — no Spark job. Each append is one
+  file, written under a ``_``-prefixed name (invisible to every reader)
+  and renamed into place, so a reader never sees a torn file. Like
+  ``_reconcile``, this assumes the root is a local (or locally mounted)
+  filesystem.
 * Rollup hash = ``bit_xor`` of per-row ``xxhash64`` over the canonicalized
   row — order-insensitive, computed JVM-side, so two runs (any partitioning,
   any executor count) of the same day must produce the same hash.
@@ -19,7 +30,7 @@ Design
   not in its stage's set (a filter on ``day``, no join). Day directories
   on disk that have NO lineage row are torn out first (a crash window
   leaves data without lineage, never lineage without data — lineage is
-  committed last).
+  committed last, after the one write).
 
 Iceberg note: the north star names Iceberg tables; this container has no
 Iceberg runtime jar (offline, no spark.jars.packages), so the storage layer
@@ -34,13 +45,24 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 from datetime import date
+from functools import reduce
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sparkts.operators.rollup import STAT_COLS, TIERS, rollup_base, rollup_cascade
 
-LINEAGE_COLS = ["stage", "part_id", "watermark", "n_in", "n_out", "rollup_hash", "run_id"]
+#: the one on-disk schema of a lineage row (the types Spark used to infer
+#: for these columns: strings, and int64 for the counters and the hash)
+LINEAGE_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("part_id", pa.string()),
+    ("watermark", pa.int64()), ("n_in", pa.int64()), ("n_out", pa.int64()),
+    ("rollup_hash", pa.int64()), ("run_id", pa.string()),
+])
 
 
 def rollup_hash_col() -> F.Column:
@@ -53,7 +75,8 @@ def rollup_hash_col() -> F.Column:
 
 
 class LineageStore:
-    """Parquet-backed lineage table under ``<base>/_lineage``."""
+    """Parquet lineage table under ``<base>/_lineage``, appended and
+    listed by the driver (pyarrow); ``read()`` is a Spark DataFrame."""
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
@@ -65,21 +88,27 @@ class LineageStore:
         return self.spark.read.parquet(self.path)
 
     def completed(self) -> dict[str, set[str]]:
-        """stage → the part ids recorded for it, from one read."""
-        df = self.read()
+        """stage → the part ids recorded for it, from one driver-side read
+        (files named ``_*``/``.*`` are skipped, as Spark skips them)."""
         done: dict[str, set[str]] = {}
-        if df is not None:
-            for r in df.select("stage", "part_id").collect():
-                done.setdefault(r.stage, set()).add(r.part_id)
+        if os.path.exists(self.path):
+            tbl = pads.dataset(self.path, schema=LINEAGE_SCHEMA,
+                               format="parquet").to_table(
+                columns=["stage", "part_id"])
+            for stage, part in zip(tbl["stage"].to_pylist(),
+                                   tbl["part_id"].to_pylist()):
+                done.setdefault(stage, set()).add(part)
         return done
 
     def append(self, rows: list[dict]) -> None:
+        """One parquet file per call, renamed into place once complete."""
         if not rows:
             return
-        df = self.spark.createDataFrame(
-            [tuple(r[c] for c in LINEAGE_COLS) for r in rows], LINEAGE_COLS
-        )
-        df.write.mode("append").parquet(self.path)
+        os.makedirs(self.path, exist_ok=True)
+        name = f"{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, f"_{name}")
+        pq.write_table(pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA), tmp)
+        os.replace(tmp, os.path.join(self.path, f"part-{name}"))
 
 
 def _reconcile(out_dir: str, completed: set[str]) -> None:
@@ -91,6 +120,10 @@ def _reconcile(out_dir: str, completed: set[str]) -> None:
             shutil.rmtree(os.path.join(out_dir, d))
 
 
+def _day_in(days: set[str]) -> F.Column:
+    return F.col("day").isin([date.fromisoformat(d) for d in days])
+
+
 class TierPipeline:
     """Raw activity table → checkpointed 1m/5m/1h/1d tier tables.
 
@@ -99,9 +132,11 @@ class TierPipeline:
         pipe = TierPipeline(spark, out_dir, key_cols=["domain"])
         pipe.run(activity_df, ts_col="warc_ts", value_col="bytes", run_id="r1")
 
-    Each tier is derived from the previously *written* finer tier (not from a
-    live lineage of the raw scan), so a resumed run never rescans raw data
-    for tiers already built.
+    Each coarser tier is cascaded in memory from the finer tier's pending
+    rows; days already written for the finer tier but not for this one
+    are re-read from the finer tier on disk, so a resumed run never
+    rescans raw data for tiers already built. Every tier of a run lands in
+    one partitioned write.
     """
 
     def __init__(self, spark: SparkSession, out_dir: str, key_cols: list[str]):
@@ -115,56 +150,6 @@ class TierPipeline:
 
     def read_tier(self, tier: str) -> DataFrame:
         return self.spark.read.parquet(self.tier_path(tier))
-
-    # ------------------------------------------------------------------ #
-    def _write_pending_days(
-        self, stage: str, tier_df: DataFrame, out_path: str, run_id: str,
-        done: set[str],
-    ) -> int:
-        """Write only days not in ``done`` (the stage's lineage days);
-        lineage rows last."""
-        _reconcile(out_path, done)
-        pending = tier_df.withColumn("day", F.to_date("bucket"))
-        if done:
-            pending = pending.where(~F.col("day").isin(
-                [date.fromisoformat(d) for d in done]))
-        pending = pending.cache()
-        try:
-            day_stats = (
-                pending.withColumn("h", rollup_hash_col())
-                .groupBy("day")
-                .agg(
-                    F.count("*").alias("n_out"),
-                    F.max(F.col("bucket").cast("long")).alias("wm"),
-                    F.expr("bit_xor(h)").alias("rollup_hash"),
-                    F.sum("n_rows").alias("n_in"),
-                )
-                .collect()
-            )
-            if not day_stats:
-                return 0
-            (
-                pending.write.mode("append")
-                .partitionBy("day")
-                .parquet(out_path)
-            )
-            self.lineage.append(
-                [
-                    {
-                        "stage": stage,
-                        "part_id": str(r.day),
-                        "watermark": int(r.wm),
-                        "n_in": int(r.n_in),
-                        "n_out": int(r.n_out),
-                        "rollup_hash": int(r.rollup_hash),
-                        "run_id": run_id,
-                    }
-                    for r in day_stats
-                ]
-            )
-            return len(day_stats)
-        finally:
-            pending.unpersist()
 
     # ------------------------------------------------------------------ #
     def run(
@@ -184,24 +169,70 @@ class TierPipeline:
         pipeline used to drop them, silently disabling the
         extraction-mismatch check the north rule requires."""
         tiers = sorted(tiers or list(TIERS), key=lambda t: TIERS[t])
-        # one lineage read per run: this run only appends rows of the
-        # stage it just wrote, so each later stage's set cannot change
-        done = self.lineage.completed()
-        results: dict[str, int] = {}
-        base = tiers[0]
-        base_df = rollup_base(activity, ts_col, self.key_cols, value_col,
-                              base, extra_aggs=extra_aggs)
-        results[base] = self._write_pending_days(
-            f"tier_{base}", base_df, self.tier_path(base), run_id,
-            done.get(f"tier_{base}", set()),
-        )
         extra_cols = list(extra_aggs or {})
-        for prev, cur in zip(tiers, tiers[1:]):
-            finer = self.read_tier(prev).drop("day")
-            casc = rollup_cascade(finer, self.key_cols, cur,
-                                  extra_sum_cols=extra_cols)
-            results[cur] = self._write_pending_days(
-                f"tier_{cur}", casc, self.tier_path(cur), run_id,
-                done.get(f"tier_{cur}", set()),
+        # one lineage read per run: lineage is appended only after the
+        # write, so no stage's set changes while the plan is built
+        done = self.lineage.completed()
+        # committed task outputs a killed write left behind would be
+        # merged into the next write's commit
+        shutil.rmtree(os.path.join(self.out_dir, "_temporary"),
+                      ignore_errors=True)
+        parts, prev, prev_rows = [], None, None
+        for t in tiers:
+            t_done = done.get(f"tier_{t}", set())
+            _reconcile(self.tier_path(t), t_done)
+            if prev is None:
+                rows = rollup_base(activity, ts_col, self.key_cols, value_col,
+                                   t, extra_aggs=extra_aggs)
+            else:
+                # days on disk for the finer tier but not done for this
+                # one (a crash between the two stages' lineage rows)
+                backfill = done.get(f"tier_{prev}", set()) - t_done
+                if backfill:
+                    disk = self.read_tier(prev).where(_day_in(backfill))
+                    prev_rows = prev_rows.unionByName(disk.drop("day"))
+                rows = rollup_cascade(prev_rows, self.key_cols, t,
+                                      extra_sum_cols=extra_cols)
+            rows = rows.withColumn("day", F.to_date("bucket"))
+            if t_done:
+                rows = rows.where(~_day_in(t_done))
+            parts.append(rows.withColumn("tier", F.lit(t)))
+            prev, prev_rows = t, rows.drop("day")
+
+        # one (tier, day) per rebalanced partition → one file per day
+        # directory; AQE may still split a skewed day at scale
+        pending = (reduce(DataFrame.unionByName, parts)
+                   .hint("rebalance", F.col("tier"), F.col("day")).cache())
+        try:
+            day_stats = (
+                pending.withColumn("h", rollup_hash_col())
+                .groupBy("tier", "day")
+                .agg(
+                    F.count("*").alias("n_out"),
+                    F.max(F.col("bucket").cast("long")).alias("wm"),
+                    F.expr("bit_xor(h)").alias("rollup_hash"),
+                    F.sum("n_rows").alias("n_in"),
+                )
+                .collect()
             )
+            if day_stats:
+                (pending.write.mode("append").partitionBy("tier", "day")
+                 .parquet(self.out_dir))
+        finally:
+            pending.unpersist()
+        self.lineage.append([
+            {
+                "stage": f"tier_{r.tier}",
+                "part_id": str(r.day),
+                "watermark": int(r.wm),
+                "n_in": int(r.n_in),
+                "n_out": int(r.n_out),
+                "rollup_hash": int(r.rollup_hash),
+                "run_id": run_id,
+            }
+            for r in day_stats
+        ])
+        results = dict.fromkeys(tiers, 0)
+        for r in day_stats:
+            results[r.tier] += 1
         return results

@@ -124,10 +124,12 @@ def build_tiers(
 ) -> dict[str, DataFrame]:
     """Full cascade: raw → finest tier → each coarser tier from the previous.
 
-    Returned DataFrames are lazy; callers persist/write per tier (the
-    pipeline in ``jobs/tier_pipeline.py`` checkpoints each to parquet/Iceberg
-    with lineage so the raw scan happens once). ``extra_aggs`` (sum-
-    decomposable) propagate through every tier.
+    Returned DataFrames are lazy and each coarser one embeds the finer
+    one's plan, so writing them one by one re-runs the cascade below each
+    tier. ``lineage.TierPipeline`` instead unions the same cascade under a
+    ``tier`` column and writes every tier in one job (one raw scan, with
+    lineage). ``extra_aggs`` (sum-decomposable) propagate through every
+    tier.
     """
     tiers = tiers or list(TIERS)
     tiers = sorted(tiers, key=lambda t: TIERS[t])

@@ -15,9 +15,10 @@ dropped by Spark (documented behavior). The batch backfill path
 the lineage table records which bucket ranges came from which path.
 
 Commit ledger: a batch's rows land in ``data/batch=<id>`` and only then
-its one-row marker ``commits/batch=<id>``. The set of committed ids is
-found in one place, ``_committed``: a single Hadoop glob over the marker
-directories, no Spark job. Every reader, the compactor and the batch
+its marker, the empty file ``commits/batch=<id>/committed``, created by
+the driver without a Spark job. The set of committed ids is found in one
+place, ``_committed``: a single Hadoop glob over the marker directories,
+no Spark job. Every reader, the compactor and the batch
 publisher take that set; data directories without a finished marker are
 invisible.
 """
@@ -80,10 +81,13 @@ def commit_batch(batch_df: DataFrame, batch_id: int, out_path: str) -> None:
     1. the batch's rows land in ``data/batch=<id>`` with OVERWRITE — a
        replayed batch (foreachBatch is at-least-once after a crash/restart)
        rewrites its own directory instead of appending duplicates;
-    2. only then is the marker ``commits/batch=<id>`` written — readers
-       take committed batches only, so a crash between the data write and
-       the marker write leaves an invisible orphan that the replay simply
-       overwrites.
+    2. only then is the marker, an empty ``commits/batch=<id>/committed``
+       file, created — by the driver through the Hadoop ``FileSystem``,
+       no Spark job. An empty file cannot be torn, and creating it again
+       on replay is a no-op. Readers take committed batches only, so a
+       crash between the data write and the marker leaves an invisible
+       orphan that the replay simply overwrites. (Markers written as a
+       one-row parquet directory by earlier versions still count.)
 
     Observable output is therefore exactly-once: duplicate invocations of
     the same (batch_df, batch_id) are byte-idempotent (tested by replaying
@@ -91,10 +95,9 @@ def commit_batch(batch_df: DataFrame, batch_id: int, out_path: str) -> None:
     spark = batch_df.sparkSession
     batch_df.write.mode("overwrite").parquet(
         f"{out_path}/data/batch={int(batch_id)}")
-    spark.createDataFrame([(int(batch_id),)], "batch_id long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(
-        f"{out_path}/commits/batch={int(batch_id)}")
+    marker = spark._jvm.org.apache.hadoop.fs.Path(
+        f"{out_path}/commits/batch={int(batch_id)}/committed")
+    marker.getFileSystem(spark._jsc.hadoopConfiguration()).createNewFile(marker)
 
 
 def write_tier_stream(

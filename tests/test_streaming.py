@@ -216,6 +216,8 @@ def test_uncommitted_orphan_batch_is_invisible(spark, events_dir,
     DURING the marker write leaves a marker directory holding only
     ``_temporary/``: readers, the compactor and the batch publisher must
     treat that batch as uncommitted too."""
+    from pyspark.sql import functions as F
+
     from sparkts.streaming.rollup import (BATCH_ID_BASE, commit_batch,
                                           commit_tier_batch,
                                           compact_tier_output)
@@ -224,6 +226,10 @@ def test_uncommitted_orphan_batch_is_invisible(spark, events_dir,
     raw = spark.read.parquet(events_dir)
     tier = rollup_base(raw, "ts", ["event_type"], "value", "1m")
     commit_batch(tier, 0, out)
+    # the marker is one empty file; an empty file cannot be torn
+    marker = f"{out}/commits/batch=0"
+    assert [f for f in os.listdir(marker) if f[0] != "."] == ["committed"]
+    assert os.path.getsize(f"{marker}/committed") == 0
     # simulate the torn write: data lands, marker never does
     tier.limit(5).withColumn("n_rows", F_lit_999()).write.mode(
         "overwrite").parquet(f"{out}/data/batch=1")
@@ -243,6 +249,23 @@ def test_uncommitted_orphan_batch_is_invisible(spark, events_dir,
     assert compact_tier_output(spark, out, ["event_type"]) == 1
     got = read_tier_stream_output(spark, out, ["event_type"]).toPandas()
     assert len(got) == len(want)
+    assert not (got["n_rows"] == 999).any()
+
+    # a batch committed with an older marker layout (a one-row parquet
+    # directory) still counts as committed, and the compactor folds it
+    tier.limit(5).withColumn("n_rows", F.lit(777).cast("long")).write.mode(
+        "overwrite").parquet(f"{out}/data/batch=5")
+    spark.createDataFrame([(5,)], "batch_id long").coalesce(1).write.mode(
+        "overwrite").parquet(f"{out}/commits/batch=5")
+    got = read_tier_stream_output(spark, out, ["event_type"]).toPandas()
+    assert len(got) == len(want)
+    assert (got["n_rows"] == 777).sum() == 5
+    assert compact_tier_output(spark, out, ["event_type"]) == 6
+    assert not os.path.exists(f"{out}/data/batch=5")
+    assert not os.path.exists(f"{out}/commits/batch=5")
+    got = read_tier_stream_output(spark, out, ["event_type"]).toPandas()
+    assert len(got) == len(want)
+    assert (got["n_rows"] == 777).sum() == 5
     assert not (got["n_rows"] == 999).any()
 
     # a fresh directory whose only marker is torn has nothing committed:
