@@ -29,7 +29,7 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sparkts.kernels.base import Model
 from sparkts.plans.schema import (

@@ -270,7 +270,11 @@ def ivf_assign_col(vec_col: str, centroids: np.ndarray) -> F.Column:
     boundary vectors resolve the same way in any engine that recomputes the
     assignment (FP summation order differs across engines; strict `<` on raw
     doubles would make the tie-break depend on the last ulp). Ties after
-    rounding go to the lower centroid index on every side."""
+    rounding go to the lower centroid index on every side.
+
+    Null and NaN input: a null vector is assigned NULL, so it falls in no
+    list and no probe returns it. A vector with a NaN component makes
+    every distance NaN, and it is assigned centroid 0."""
     v = F.col(vec_col)
     # r6: transform over one array-of-arrays literal + array_min/position
     # instead of a per-centroid when-chain. The when-chain embedded each

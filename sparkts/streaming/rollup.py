@@ -14,12 +14,13 @@ dropped by Spark (documented behavior). The batch backfill path
 (rollup_base over the raw table) remains the source of truth for replays —
 the lineage table records which bucket ranges came from which path.
 
-Commit ledger: a batch's rows land in ``data/batch=<id>`` and only then
+Commit log: a batch's rows land in ``data/batch=<id>`` and only then
 its marker, the empty file ``commits/batch=<id>/committed``, created by
-the driver without a Spark job. The set of committed ids is found in one
-place, ``_committed``: a single Hadoop glob over the marker directories,
-no Spark job. Every reader, the compactor and the batch
-publisher take that set; data directories without a finished marker are
+the driver without a Spark job. The markers are the sink's only ledger.
+The set of committed ids is found in one place, ``_committed``: a single
+Hadoop glob over the marker directories, no Spark job. Every reader and
+the compactor take that set, and a writer starts its ids at the highest
+committed id + 1; data directories without a finished marker are
 invisible.
 """
 
@@ -54,11 +55,12 @@ def stream_rollup(
 
 def _committed(spark, out_path: str) -> list[int]:
     """Committed batch ids under ``out_path``, ascending, from ONE Hadoop
-    glob over the ``commits/batch=<id>`` markers — no Spark job. A marker
-    counts once its write has finished, i.e. once it holds a visible file
-    (name not starting with ``_`` or ``.``, the rule a parquet read of
-    ``commits/`` applies), so a marker directory still holding only
-    ``_temporary/`` is uncommitted. A missing ``commits/`` globs to
+    glob over the ``commits/batch=<id>`` markers — no Spark job. Every
+    reader, the compactor and the stream writer's id floor derive from
+    this set. A marker counts once its write has finished, i.e. once it
+    holds a visible file (name not starting with ``_`` or ``.``, the rule
+    a parquet read of ``commits/`` applies), so a marker directory still
+    holding only ``_temporary/`` is uncommitted. A missing ``commits/`` globs to
     nothing (``[]``); any other listing failure raises."""
     pattern = spark._jvm.org.apache.hadoop.fs.Path(
         f"{out_path}/commits/batch=*/[!_.]*")
@@ -115,23 +117,18 @@ def write_tier_stream(
     comes from the streaming checkpoint; duplicate-delivery safety (the
     at-least-once foreachBatch contract) comes from the commit protocol.
     ``available_now`` processes the backlog and stops — the batch-like mode
-    used in tests and backfills."""
+    used in tests and backfills.
 
-    # id floor: checkpoint micro-batch counters restart at 0 with a fresh
-    # checkpoint, and compact_tier_output consolidates history into a
-    # high id — committing raw counter ids would overwrite those
-    # generations. The floor (written by the compactor) is read ONCE at
-    # writer start, so within-run replays keep their exact ids
-    # (byte-idempotent), while a writer started after a compaction lands
-    # strictly above the consolidated generation.
-    from pyspark.errors import AnalysisException
-
+    Ids: the checkpoint's micro-batch counter restarts at 0 with a fresh
+    checkpoint, so the sink commits ``floor + counter``, where ``floor``
+    is the highest committed id + 1, read ONCE at writer start from the
+    commit log. Within a run, a replayed batch keeps its exact id
+    (byte-idempotent). Every id of a new run lands above every committed
+    generation, a compacted one included; a batch replayed after a restart
+    gets a new, higher id with the same rows, which latest-wins hides and
+    the next compaction folds."""
     spark = tier_df.sparkSession
-    try:
-        floor = int(spark.read.parquet(f"{out_path}/floor")
-                    .agg(F.max("next_id")).collect()[0][0] or 0)
-    except AnalysisException:
-        floor = 0
+    floor = max(_committed(spark, out_path), default=-1) + 1
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         commit_batch(batch_df, floor + batch_id, out_path)
@@ -144,53 +141,6 @@ def write_tier_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-#: batch publishes allocate generation ids at and above this base — a
-#: namespace disjoint from the streaming sink's ids (which come from the
-#: STREAM CHECKPOINT's micro-batch counter, not from the commits dir, and
-#: count up from 0), so a streaming writer sharing the directory can never
-#: reuse a batch generation's id and overwrite it
-BATCH_ID_BASE = 1 << 33
-
-
-def commit_tier_batch(df: DataFrame, out_path: str) -> int:
-    """Transactional BATCH publish of a tier table through the same
-    batch-id commit protocol the streaming sink uses (round-5 stretch —
-    the parquet+manifest stand-in for an Iceberg snapshot commit, Iceberg
-    jars being unavailable offline): the new generation lands in
-    ``data/batch=<id>`` first, the marker second, so a reader
-    (``read_tier_stream_output``) sees the PREVIOUS generation until the
-    marker lands and never a torn write. Batch and streaming writers can
-    share one output directory: batch generations live in the disjoint
-    id namespace ≥ ``BATCH_ID_BASE`` (streaming micro-batch ids are
-    checkpoint counters from 0, NOT allocated from the commits dir, so
-    "max committed + 1" alone would collide with the stream's next
-    micro-batch and be silently overwritten). Under latest-wins
-    merge-on-read a batch publish therefore supersedes stream batches —
-    snapshot-replaces-table semantics. Returns the committed id."""
-    # a missing commits dir is the first publish; any OTHER listing
-    # failure must propagate — treating a transient listing error as
-    # "nothing committed" would re-allocate id BATCH_ID_BASE and overwrite
-    # the oldest committed generation
-    committed = _committed(df.sparkSession, out_path)
-    new_id = max((c for c in committed if c >= BATCH_ID_BASE),
-                 default=BATCH_ID_BASE - 1) + 1
-    commit_batch(df, new_id, out_path)
-    return new_id
-
-
-def read_tier_snapshot(spark, out_path: str) -> DataFrame:
-    """Snapshot read for batch-published generations: the HIGHEST
-    committed batch id replaces the table wholesale (Iceberg-snapshot
-    semantics), unlike ``read_tier_stream_output``'s per-bucket
-    latest-wins merge (streaming upsert semantics). Torn writes (data
-    without marker) stay invisible either way."""
-    committed = _committed(spark, out_path)
-    if not committed:
-        raise ValueError(f"nothing committed under {out_path}")
-    return (spark.read.parquet(f"{out_path}/data")
-            .where(F.col("batch") == committed[-1]).drop("batch"))
 
 
 def read_tier_stream_output(spark, out_path: str, key_cols: list[str]) -> DataFrame:
@@ -223,68 +173,28 @@ def compact_tier_output(spark, out_path: str, key_cols: list[str]) -> int:
     directory the latest-wins read ignores.
 
     Compaction must not race a RUNNING stream writer (it is the OPTIMIZE
-    step between runs): a live writer's next checkpoint counter would be
-    exactly max(committed)+1 — the consolidated id — and its overwrite
-    would destroy the folded history. The ``floor`` record written below
-    makes the NEXT writer start safe mechanically: ``write_tier_stream``
-    reads it once at start and offsets every checkpoint id above the
-    consolidated generation (fresh or resumed checkpoint alike).
+    step between runs): a live writer's floor was read before the
+    consolidated id existed, so one of its next ids can equal it, and its
+    overwrite would destroy the folded history. A writer started after
+    the compaction reads a floor above the consolidated id.
 
-    Namespace discipline (r6 fix of the round-5 ADVICE finding): stream
-    generations (< BATCH_ID_BASE) and batch-publish generations
-    (≥ BATCH_ID_BASE) are compacted SEPARATELY. Folding everything into
-    max(committed)+1 would, whenever any batch generation exists, land the
-    consolidated id — and the floor — inside the batch namespace, so later
-    stream micro-batches would allocate batch-namespace ids and a
-    subsequent ``commit_tier_batch`` could silently overwrite (or be
-    overwritten by) a live stream writer. Instead: the stream namespace
-    consolidates into max(stream ids)+1 (always < BATCH_ID_BASE — enforced)
-    and the floor stays inside the stream namespace; the batch namespace
-    needs no merge at all (snapshot-replaces-table: the highest batch id IS
-    the table), so compaction simply retires the superseded batch
-    generations. The merged-read semantics are unchanged either way:
-    latest-wins per bucket still sees exactly the same values.
-
-    Returns the consolidated stream batch id (or, when only batch
-    generations exist, the surviving snapshot id)."""
+    Returns the consolidated batch id."""
     committed = _committed(spark, out_path)
     if not committed:
         raise ValueError(f"nothing committed under {out_path}")
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(out_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def gc(ids):
-        for b in ids:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(
-                f"{out_path}/commits/batch={b}"), True)
-            fs.delete(jvm.org.apache.hadoop.fs.Path(
-                f"{out_path}/data/batch={b}"), True)
-
-    stream_gens = [c for c in committed if c < BATCH_ID_BASE]
-    batch_gens = [c for c in committed if c >= BATCH_ID_BASE]
-    # batch namespace: highest id is the whole snapshot — older batch
-    # generations are pure garbage, retire them without a rewrite
-    if batch_gens:
-        gc(b for b in batch_gens if b != max(batch_gens))
-    if not stream_gens:
-        return max(batch_gens)
-    new_id = max(stream_gens) + 1
-    if new_id >= BATCH_ID_BASE:
-        raise ValueError(
-            f"stream id namespace exhausted under {out_path}: "
-            f"consolidated id {new_id} would enter the batch namespace")
-    # merged view of the STREAM generations only (a committed batch
-    # snapshot keeps shadowing per-bucket under latest-wins regardless)
+    new_id = committed[-1] + 1
     merged = _latest_wins(spark.read.parquet(f"{out_path}/data").where(
-        F.col("batch").isin(stream_gens)), key_cols)
+        F.col("batch").isin(committed)), key_cols)
     commit_batch(merged, new_id, out_path)
-    # GC superseded stream generations only after the marker landed
-    gc(stream_gens)
-    # id floor for the next stream writer (see write_tier_stream); stays
-    # strictly inside the stream namespace
-    spark.createDataFrame([(new_id + 1,)], "next_id long").coalesce(
-        1).write.mode("overwrite").parquet(f"{out_path}/floor")
+    # GC superseded generations only after the marker landed
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.Path(out_path).getFileSystem(
+        spark._jsc.hadoopConfiguration())
+    for b in committed:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(
+            f"{out_path}/commits/batch={b}"), True)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(
+            f"{out_path}/data/batch={b}"), True)
     return new_id
 
 

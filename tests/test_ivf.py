@@ -32,6 +32,13 @@ def test_assignment_jvm_side(emb, centroids):
     lists = assigned.groupBy("l").count().toPandas()
     assert lists["l"].between(0, 7).all()
     assert len(lists) >= 4  # vectors spread over multiple lists
+    # a null vector is assigned NULL; a NaN component makes every distance
+    # NaN, which is assigned centroid 0
+    odd = emb.sparkSession.createDataFrame(
+        [(0, None), (1, [float("nan")] + [1.0] * (centroids.shape[1] - 1))],
+        "k int, embedding array<float>")
+    got = odd.select("k", ivf_assign_col("embedding", centroids).alias("l"))
+    assert dict(got.collect()) == {0: None, 1: 0}
 
 
 def test_probe_recall_vs_bruteforce(emb, centroids):

@@ -125,10 +125,11 @@ def test_compaction_preserves_view_and_gcs_old_batches(spark, events_dir,
 
 def test_stream_writer_after_compaction_respects_floor(spark, events_dir,
                                                        tmp_path_factory):
-    """Regression: a stream writer started AFTER a compaction (fresh or
-    resumed checkpoint — counters restart at 0 either way with a fresh
-    one) must not overwrite the consolidated generation. The floor record
-    the compactor writes offsets the new writer's ids above it."""
+    """Regression: a stream writer started AFTER a compaction (its
+    checkpoint counters restart at 0 with a fresh checkpoint) must not
+    overwrite the consolidated generation. The writer's id floor, the
+    highest committed id + 1 read from the commit log at start, offsets
+    its ids above it."""
     import os
 
     from pyspark.sql import functions as F
@@ -167,59 +168,16 @@ def test_stream_writer_after_compaction_respects_floor(spark, events_dir,
     pd.testing.assert_frame_equal(got, want, check_exact=False, rtol=1e-12)
 
 
-def test_compaction_keeps_stream_floor_below_batch_namespace(
-        spark, events_dir, tmp_path_factory):
-    """r6 regression (round-5 ADVICE): compacting a directory that holds
-    BOTH stream micro-batches and a batch publish must keep the
-    consolidated stream id and the floor BELOW BATCH_ID_BASE — otherwise
-    later stream writers allocate batch-namespace ids and a subsequent
-    commit_tier_batch can collide with a live stream writer. Batch
-    generations are retired to the newest snapshot without a rewrite."""
-    import os
-
-    from pyspark.sql import functions as F
-    from sparkts.streaming.rollup import BATCH_ID_BASE
-    from sparkts.streaming import (commit_batch,
-                                   commit_tier_batch, compact_tier_output,
-                                   read_tier_snapshot)
-
-    out = str(tmp_path_factory.mktemp("tier_ns"))
-    raw = spark.read.parquet(events_dir)
-    tier = rollup_base(raw, "ts", ["event_type"], "value", "1m")
-    commit_batch(tier.where(F.dayofmonth("bucket") <= 15), 0, out)
-    commit_batch(tier.where(F.dayofmonth("bucket") > 15), 1, out)
-    snap0 = commit_tier_batch(tier.limit(5), out)
-    snap1 = commit_tier_batch(tier.limit(7), out)
-    assert snap1 == snap0 + 1
-
-    new_id = compact_tier_output(spark, out, ["event_type"])
-    # consolidated stream id stays in the stream namespace...
-    assert new_id == 2 and new_id < BATCH_ID_BASE
-    # ...the floor does too...
-    floor = int(spark.read.parquet(f"{out}/floor")
-                .agg(F.max("next_id")).collect()[0][0])
-    assert floor == new_id + 1 and floor < BATCH_ID_BASE
-    # ...the older batch snapshot is retired, the newest survives...
-    dirs = sorted(int(d.split("=")[1]) for d in os.listdir(f"{out}/data"))
-    assert dirs == [new_id, snap1]
-    # ...and a post-compaction batch publish allocates a FRESH id above
-    # the surviving snapshot (no collision with stream ids)
-    snap2 = commit_tier_batch(tier.limit(3), out)
-    assert snap2 == snap1 + 1
-    assert read_tier_snapshot(spark, out).count() == 3
-
-
 def test_uncommitted_orphan_batch_is_invisible(spark, events_dir,
                                                tmp_path_factory):
     """A crash BETWEEN the data write and the marker write leaves an
     orphan data/batch=N directory; readers must not see it. A crash
     DURING the marker write leaves a marker directory holding only
-    ``_temporary/``: readers, the compactor and the batch publisher must
+    ``_temporary/``: readers, the compactor and the writer's id floor must
     treat that batch as uncommitted too."""
     from pyspark.sql import functions as F
 
-    from sparkts.streaming.rollup import (BATCH_ID_BASE, commit_batch,
-                                          commit_tier_batch,
+    from sparkts.streaming.rollup import (_committed, commit_batch,
                                           compact_tier_output)
 
     out = str(tmp_path_factory.mktemp("tier_orphan"))
@@ -268,11 +226,68 @@ def test_uncommitted_orphan_batch_is_invisible(spark, events_dir,
     assert (got["n_rows"] == 777).sum() == 5
     assert not (got["n_rows"] == 999).any()
 
-    # a fresh directory whose only marker is torn has nothing committed:
-    # the first batch publish takes BATCH_ID_BASE
+    # a fresh directory whose only marker is torn has nothing committed
     fresh = str(tmp_path_factory.mktemp("tier_fresh")) + "/tier"
-    os.makedirs(f"{fresh}/commits/batch={BATCH_ID_BASE}/_temporary/0")
-    assert commit_tier_batch(tier.limit(3), fresh) == BATCH_ID_BASE
+    os.makedirs(f"{fresh}/commits/batch=0/_temporary/0")
+    assert _committed(spark, fresh) == []
+
+
+@pytest.mark.parametrize("crash", ["no_compaction", "before_marker",
+                                   "before_gc", "mid_gc"])
+def test_stream_writer_after_crash_keeps_committed_rows(
+        spark, events_dir, tmp_path_factory, crash):
+    """A writer with a fresh checkpoint, started on a sink left in any
+    state a crash of the commit protocol can leave — batches never
+    compacted; compaction stopped after its data write, after its marker,
+    or after GC of one old generation — commits above every committed
+    generation: the merged read is the committed rows overlaid by the new
+    rows, none lost."""
+    import shutil
+
+    from pyspark.sql import functions as F
+    from sparkts.streaming.rollup import _latest_wins, commit_batch
+
+    key = ["event_type"]
+    cols = ["event_type", "bucket", "n_rows", "v_sum", "v_min", "v_max"]
+    out = str(tmp_path_factory.mktemp(f"crash_{crash}"))
+    raw = spark.read.parquet(events_dir)
+    tier = rollup_base(raw, "ts", key, "value", "1m")
+    commit_batch(tier.where(F.dayofmonth("bucket") <= 15), 0, out)
+    commit_batch(tier.where(F.dayofmonth("bucket") > 15), 1, out)
+    if crash != "no_compaction":
+        # compact_tier_output's steps, stopped where the crash hits
+        merged = _latest_wins(spark.read.parquet(f"{out}/data"), key)
+        if crash == "before_marker":
+            merged.write.parquet(f"{out}/data/batch=2")
+        else:
+            commit_batch(merged, 2, out)
+        if crash == "mid_gc":
+            shutil.rmtree(f"{out}/commits/batch=0")
+            shutil.rmtree(f"{out}/data/batch=0")
+    old = read_tier_stream_output(spark, out, key).select(cols).toPandas()
+
+    # one day of events with value × 2, streamed in two micro-batches
+    day = raw.where(F.dayofmonth("ts") == 3).withColumn(
+        "value", F.col("value") * 2)
+    src = str(tmp_path_factory.mktemp(f"crash_src_{crash}"))
+    day.repartition(2).write.mode("overwrite").parquet(src)
+    stream = (spark.readStream.schema(day.schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    t = stream_rollup(stream, "ts", key, "value", tier="1m",
+                      watermark="365 days")
+    ckpt = str(tmp_path_factory.mktemp(f"crash_ckpt_{crash}"))
+    write_tier_stream(t, out, ckpt, available_now=True).awaitTermination(180)
+
+    new = rollup_base(day, "ts", key, "value", "1m").select(cols).toPandas()
+    assert len(new) > 0
+    ids = ["event_type", "bucket"]
+    shadowed = old.set_index(ids).index.isin(new.set_index(ids).index)
+    want = (pd.concat([old[~shadowed], new]).sort_values(ids)
+            .reset_index(drop=True))
+    got = (read_tier_stream_output(spark, out, key).select(cols).toPandas()
+           .sort_values(ids).reset_index(drop=True))
+    assert len(got) == len(want) == len(tier.toPandas())
+    pd.testing.assert_frame_equal(got, want, check_exact=False, rtol=1e-12)
 
 
 def F_lit_999():
@@ -383,57 +398,3 @@ def test_stream_cascade_equals_batch_and_resumes(spark, events_dir,
     second.repartition(2).write.mode("append").parquet(src)
     run_stream()
     compare(full)
-
-
-def test_batch_transactional_commit(spark, events_dir, tmp_path_factory):
-    """commit_tier_batch publishes generations atomically: a reader sees
-    the previous generation until the marker lands; a torn write (data
-    directory without marker) stays invisible; generations interleave
-    with the streaming sink's ids."""
-    from sparkts.streaming import commit_tier_batch, read_tier_snapshot
-    from sparkts.streaming.rollup import BATCH_ID_BASE, commit_batch
-
-    out = str(tmp_path_factory.mktemp("txn")) + "/tier"
-    ev = spark.read.parquet(events_dir)
-    gen0 = rollup_base(ev, "ts", ["event_type"], "value", "1h")
-    assert commit_tier_batch(gen0, out) == BATCH_ID_BASE
-    n0 = read_tier_snapshot(spark, out).count()
-    assert n0 == gen0.count()
-
-    # new generation with an extra filter — replaces the view atomically
-    gen1 = gen0.where("n_rows > 1")
-    assert commit_tier_batch(gen1, out) == BATCH_ID_BASE + 1
-    assert read_tier_snapshot(spark, out).count() == gen1.count() < n0
-
-    # torn write: data lands but no marker → invisible
-    gen0.write.mode("overwrite").parquet(f"{out}/data/batch={BATCH_ID_BASE + 7}")
-    assert read_tier_snapshot(spark, out).count() == gen1.count()
-    # the next allocation skips PAST committed ids only (the orphan id is
-    # overwritten territory, not committed)
-    assert commit_tier_batch(gen0, out) == BATCH_ID_BASE + 2
-    assert read_tier_snapshot(spark, out).count() == n0
-
-
-def test_batch_publish_ids_disjoint_from_stream_ids(
-        spark, events_dir, tmp_path_factory):
-    """Regression: streaming micro-batch ids come from the STREAM
-    CHECKPOINT (counting 0, 1, 2, …), not from the commits dir — a batch
-    publisher allocating 'max committed + 1' would hand out the stream's
-    next id and the following micro-batch would silently overwrite the
-    batch generation. Batch publishes must land in the disjoint
-    ≥ BATCH_ID_BASE namespace."""
-    from sparkts.streaming import commit_tier_batch, read_tier_snapshot
-    from sparkts.streaming.rollup import BATCH_ID_BASE, commit_batch
-
-    out = str(tmp_path_factory.mktemp("mixed")) + "/tier"
-    ev = spark.read.parquet(events_dir)
-    tier = rollup_base(ev, "ts", ["event_type"], "value", "1h")
-    # a stream committed micro-batches 0 and 1 (checkpoint-derived ids)
-    commit_batch(tier.limit(3), 0, out)
-    commit_batch(tier.limit(5), 1, out)
-    gen = commit_tier_batch(tier, out)
-    assert gen >= BATCH_ID_BASE
-    # the stream's NEXT micro-batch (id 2) replays — it must not clobber
-    # the batch generation, and the snapshot must still be the publish
-    commit_batch(tier.limit(4), 2, out)
-    assert read_tier_snapshot(spark, out).count() == tier.count()
